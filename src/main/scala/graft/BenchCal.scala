@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Machine-load calibration shared by every timing main (Bench, the YSB
-  * streaming bench, probe mains that want a clean window).
+/** Machine-load calibration shared by every timing main (Bench,
+  * StreamBench, the YSB streaming bench).
   *
   * The probe is a fixed-cost SF-independent CPU+shuffle job: its wall
   * time depends only on the machine, so on an idle box it is stable

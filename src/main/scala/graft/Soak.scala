@@ -339,7 +339,8 @@ object Soak {
     // fits, 5M (1000×) does not. Opt out for tiers past that
     // (SPARK_GRAFT_SOAK_STREAM=0): the production path is foreachBatch/
     // file sinks (no driver collect), and the bounded-STATE evidence at
-    // big multiples is StateCurves' per-trigger rows, not sink volume.
+    // big multiples is the per-trigger state rows in STATE_CURVES_*.jsonl,
+    // not sink volume.
     if (!sys.env.get("SPARK_GRAFT_SOAK_STREAM").contains("0")) {
       val stKept = Registry.byName("qst10_stream_neardup").run(spark, out).count()
       val stEvict = graft.streaming.StreamingQueries.lastNearDupEvictions

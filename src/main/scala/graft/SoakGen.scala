@@ -1,9 +1,9 @@
 package graft
 
 /** Generate a soak tier's tables without running the soak query set —
-  * probe mains (SpillProbe, SkewProbe) need corpora at tiers the full
-  * soak never timed. Env: SPARK_GRAFT_SOAK_MULT, SPARK_GRAFT_SOAK_ZIPF,
-  * SPARK_GRAFT_SOAK_TABLES (same semantics as graft.Soak). */
+  * SpillProbe needs a corpus at a tier the full soak never timed. Env:
+  * SPARK_GRAFT_SOAK_MULT, SPARK_GRAFT_SOAK_ZIPF, SPARK_GRAFT_SOAK_TABLES
+  * (same semantics as graft.Soak). */
 object SoakGen {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -295,8 +295,8 @@ object Embeddings {
   // whole trajectory as chained MATERIALIZED CTEs (the qc04 pattern).
   // Per-iteration Lloyd monotonicity (distortion non-increasing along
   // the trajectory, strict improvement overall) is pinned by spec; the
-  // qs07/qs08 recall ladder vs iteration count is measured in AnnProbe
-  // (BASELINE.md row).
+  // qs07/qs08 recall ladder vs iteration count is recorded in
+  // ANN_PROBE_r12.json (BASELINE.md row).
   // ---------------------------------------------------------------------
   private val PqScale = 1 << 24
   /** Lloyd iterations for the gated qe04 trainer. */
@@ -313,38 +313,21 @@ object Embeddings {
   /** One Lloyd update from the current codebooks: fixed-point means per
     * (subspace, cell, dim); a cell with no members keeps its current
     * centroid. Returns the refined per-j codebooks (4×16×16 doubles —
-    * bounded driver scalars). */
-  private[graft] def pqRefineStep(s: SparkSession, d: String,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqRefineStepOn(Tables.embeddings(s, d), cbs)
-
-  /** The same Lloyd update over an arbitrary (vec_id, embedding) frame —
-    * float or double arrays; AnnProbe trains RESIDUAL codebooks with it.
+    * bounded driver scalars).
     *
-    * singlePass = true (optimization r18, guide §6/§1.2): the update used
-    * to union FOUR per-subspace projections of the encode frame — column
-    * pruning kept the per-branch assignment compute disjoint, but each
-    * branch re-scanned the embeddings input, so one Lloyd iteration cost
-    * 4 corpus scans (13 per qe04 run: 3 iterations + the final encode).
-    * The fused shape emits all four (j, code, subvector) rows from ONE
-    * scan via an array explode — identical rows, identical exact
-    * fixed-point sums, 1 scan per iteration (4 per run). singlePass =
-    * false is the A/B control. */
-  private[graft] def pqRefineStepOn(frame: DataFrame,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]],
-      singlePass: Boolean = true): IndexedSeq[IndexedSeq[Array[Double]]] = {
-    val enc = pqEncodedWith(frame, cbs.map(cbLitD))
-    val perSub = if (singlePass)
-      enc.select(explode(expr("array(" + (0 until SubVecs).map(j =>
+    * All four (j, code, subvector) rows come from ONE scan of the encode
+    * frame via an array explode (optimization r18): 1
+    * corpus scan per iteration, 4 per qe04 run. A union of four
+    * per-subspace projections re-scanned the input per branch — 13
+    * scans per run (1.39× at sf0.1, AB_PROBE_r18.jsonl). */
+  private[graft] def pqRefineStep(s: SparkSession, d: String,
+      cbs: IndexedSeq[IndexedSeq[Array[Double]]]): IndexedSeq[IndexedSeq[Array[Double]]] = {
+    val means = pqEncodedWith(Tables.embeddings(s, d), cbs.map(cbLitD))
+      .select(explode(expr("array(" + (0 until SubVecs).map(j =>
           s"named_struct('j', $j, 'k', s$j.code, " +
             s"'sub', slice(embedding, ${j * SubDim + 1}, $SubDim))")
         .mkString(", ") + ")")).as("e"))
-        .select(col("e.j").as("j"), col("e.k").as("k"), col("e.sub").as("sub"))
-    else (0 until SubVecs).map { j =>
-      enc.select(lit(j).as("j"), col(s"s$j.code").as("k"),
-        expr(s"slice(embedding, ${j * SubDim + 1}, $SubDim)").as("sub"))
-    }.reduce(_ unionAll _)
-    val means = perSub
+      .select(col("e.j").as("j"), col("e.k").as("k"), col("e.sub").as("sub"))
       .select(col("j"), col("k"), posexplode(col("sub")).as(Seq("dim", "v")))
       .select(col("j"), col("k"), col("dim"),
         expr(s"cast(round(cast(v as double) * $PqScale) as bigint)").as("q"))
@@ -364,16 +347,10 @@ object Embeddings {
     }
   }
 
-  /** `iters` Lloyd iterations from the sampled init — the full trainer
-    * (qe04 gates iters = PqIters; AnnProbe ladders recall over iters). */
-  private[graft] def pqTrainedCbs(s: SparkSession, d: String,
-      iters: Int): IndexedSeq[IndexedSeq[Array[Double]]] =
-    (0 until iters).foldLeft(initCbs(pqSample(s, d))) { (cbs, _) =>
-      pqRefineStep(s, d, cbs)
-    }
-
   private def qe04(s: SparkSession, d: String): DataFrame = {
-    val trained = pqTrainedCbs(s, d, PqIters)
+    val trained = (0 until PqIters).foldLeft(initCbs(pqSample(s, d))) {
+      (cbs, _) => pqRefineStep(s, d, cbs)
+    }
     pqEncodedWith(Tables.embeddings(s, d), trained.map(cbLitD))
       .select(col("vec_id"),
         concat_ws(",", (0 until SubVecs).map(j => col(s"s$j.code").cast("string")): _*)
@@ -479,12 +456,9 @@ object Embeddings {
   private[graft] def adcExprStr(sample: Array[Array[Float]]): String =
     adcExprStrFrom((0 until SubVecs).map(j => cbLit(sample, j)))
 
-  /** ADC search with arbitrary codebooks and top-k — qs07's body, also
-    * the instrument AnnProbe ladders recall over training iterations
-    * with. */
-  private[graft] def adcSearch(e: DataFrame,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]], topK: Int): DataFrame = {
-    val lits = cbs.map(cbLitD)
+  private def qs07(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    val lits = initCbs(pqSample(s, d)).map(cbLitD)
     val corpus = pqEncodedWith(e.filter(col("vec_id") >= 10), lits)
       .select(col("vec_id").as("n_id") +:
         (0 until SubVecs).map(j => col(s"s$j.code").as(s"code$j")): _*)
@@ -496,11 +470,8 @@ object Embeddings {
       .select(col("q_id"), col("n_id"),
         expr(adcExprStrFrom(lits)).as("adc_dist"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= 5)
   }
-
-  private def qs07(s: SparkSession, d: String): DataFrame =
-    adcSearch(Tables.embeddings(s, d), initCbs(pqSample(s, d)), topK = 5)
 
   private val qs07Sql = {
     val adc = (0 until SubVecs).map { j =>
@@ -535,11 +506,12 @@ object Embeddings {
   //     (qs05's bounded broadcast rerank).
   // At 100 TB the codes table is partitioned by cell id, so non-probed
   // cells are never read, and the scanned width is 4 codes, not 64
-  // floats — cell-bounded candidate counts × 32× compression (AnnProbe
-  // measures the candidate bound; BASELINE.md row). Determinism by
-  // inheritance: cell ranks are the fastCosine/cosineSql pair with c_id
-  // tie-breaks (qs03), ADC is qs07's exact double fold with n_id ties,
-  // rerank ties on n_id — so the composition gates hash-exactly.
+  // floats — cell-bounded candidate counts × 32× compression (the
+  // candidate bound is recorded in ANN_PROBE_r12.json; BASELINE.md row).
+  // Determinism by inheritance: cell ranks are the fastCosine/cosineSql
+  // pair with c_id tie-breaks (qs03), ADC is qs07's exact double fold
+  // with n_id ties, rerank ties on n_id — so the composition gates
+  // hash-exactly.
   // ---------------------------------------------------------------------
   private val AdcC = 20
 
@@ -758,13 +730,8 @@ object Embeddings {
        |  ((err0 + err1) + err2) + err3 AS sq_err
        |FROM rcodes""".stripMargin
 
-  private def qs09(s: SparkSession, d: String): DataFrame =
-    ivfadcSearch(s, d, pqResidualCbs(s, d), topK = 5)
-
-  /** qs09's body with arbitrary residual codebooks — AnnProbe ladders
-    * trained-residual recall with it. */
-  private[graft] def ivfadcSearch(s: SparkSession, d: String,
-      cbs: IndexedSeq[IndexedSeq[Array[Double]]], topK: Int): DataFrame = {
+  private def qs09(s: SparkSession, d: String): DataFrame = {
+    val cbs = pqResidualCbs(s, d)
     val e = Tables.embeddings(s, d)
     val cents = Similarity.ivfCentroids(s, d)
     val codes = pqEncodedWith(
@@ -787,7 +754,7 @@ object Embeddings {
       .select(col("q_id"), col("n_id"),
         expr(adcExprStrFrom(cbs.map(cbLitD))).as("adc_dist"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= 5)
   }
 
   private val qs09Sql = {

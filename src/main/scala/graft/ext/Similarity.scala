@@ -109,15 +109,6 @@ object Similarity {
       .filter(col("rank") <= topK)
   }
 
-  /** Per-bucket corpus population of the LSH index at `numPlanes` — the
-    * occupancy evidence behind the "pick 20+ planes at 100 TB" sizing rule:
-    * expected population is N / 2^planes, so doubling planes halves the
-    * per-bucket (= per-probe) work. Consumed by [[graft.AnnProbe]]. */
-  def lshBucketStats(s: SparkSession, d: String, numPlanes: Int): DataFrame =
-    Tables.embeddings(s, d).filter(col("vec_id") >= 10)
-      .withColumn("bucket", bucketExpr(numPlanes))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-
   private def qs02(s: SparkSession, d: String): DataFrame = lshAnn(s, d)
 
   private def qs02SqlFor(numPlanes: Int): String = {
@@ -690,8 +681,8 @@ object Similarity {
     * fold each cell directory's accumulated append files into one file
     * per cell — content unchanged, file count bounded, so serve-side
     * open/footer cost stays flat as appends accumulate. O(|index|) per
-    * run, amortized over the compaction cadence (IvfIngestCurve measures
-    * the trade). Write-then-swap with the compactClustered recovery
+    * run, amortized over the compaction cadence (IVF_INGEST_CURVE_r15.jsonl
+    * records the trade). Write-then-swap with the compactClustered recovery
     * discipline: a crash between the renames strands the table at
     * `.old`, and the next run restores it before compacting. */
   def compactIvfIndex(s: SparkSession, path: String): Unit = {

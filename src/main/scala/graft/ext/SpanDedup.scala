@@ -65,20 +65,6 @@ object SpanDedup {
          |  i -> md5(concat_ws(' ', slice(toks, i, $SpanK))))"""
         .stripMargin.replace("\n", " "))).as(Seq("pos", "gram")))
 
-  /** StageProbe prefix 1: tokenization + positional gram explode only. */
-  private[graft] def gramStage(docs: DataFrame): DataFrame =
-    gramOccurrences(docs
-      .select(col("doc_id"), expr("split(trim(text), '\\\\s+')").as("toks"))
-      .filter(size(col("toks")) >= SpanK))
-
-  /** StageProbe prefix 2: + the duplicate-gram key set (the one gram-keyed
-    * shuffle the min≠max rewrite reduced this to). */
-  private[graft] def dupGramStage(docs: DataFrame): DataFrame =
-    gramStage(docs)
-      .groupBy(col("gram"))
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-      .filter(col("mn") =!= col("mx")).select(col("gram"))
-
   /** The qd12 coverage computation over an arbitrary (doc_id, text) frame —
     * package-private so the spec can run it on planted-span corpora. */
   private[graft] def dupSpans(docs: DataFrame): DataFrame = {
@@ -372,7 +358,8 @@ object SpanDedup {
   // the batch's ids hash to). Snapshot expiry falls out of the design:
   // there are no retained versions to expire — appended files accumulate
   // until compact() folds each partition, the amortized O(|store|/C)
-  // move IngestCurve times separately. The partition key is the DOC id,
+  // move (INGEST_CURVE_r13_30x_compact.json times it separately). The
+  // partition key is the DOC id,
   // not the content hash: upsert-by-doc must locate a re-ingested doc's
   // OLD rows, and a content-keyed layout (substr(h,1,1)) cannot —
   // changed text moves the row to an unrelated partition, forcing a full
@@ -399,25 +386,11 @@ object SpanDedup {
   /** Classify a batch against the signature store (stateH: `h`;
     * stateChunks: `c, chunk, simhash`) — qd13's classification with the
     * seen side read from the store instead of recomputed. */
-  private[graft] def classifyAgainstState(batch: DataFrame,
-      stateH: DataFrame, stateChunks: DataFrame): DataFrame =
-    classifyAgainstStateSigs(
-      batch.select(col("doc_id"), md5(col("text")).as("h")),
-      simhashChunks(batch)
-        .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
-      stateH, stateChunks)
-
-  /** The same classification over PRE-COMPUTED batch signature frames
-    * (batchH: `doc_id, h`; batchChunks: `doc_id, c, chunk, simhash`) —
-    * the reuseSigs = true variant of qd18's ingest loop feeds the same
-    * pinned frames to classification and the store merge instead of
-    * re-deriving the projections per consumer (an r18 measured attempt,
-    * declined as the default — see ingestSequentially). Every doc has
-    * exactly one md5 row, so `batchH.select(doc_id)` is row-identical to
-    * `batch.select(doc_id)` and the statuses are unchanged. */
-  private[graft] def classifyAgainstStateSigs(batchH: DataFrame,
-      batchChunks: DataFrame,
+  private def classifyAgainstState(batch: DataFrame,
       stateH: DataFrame, stateChunks: DataFrame): DataFrame = {
+    val batchH = batch.select(col("doc_id"), md5(col("text")).as("h"))
+    val batchChunks = simhashChunks(batch)
+      .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
     val exact = batchH
       .join(stateH.select(col("h")).distinct().hint("merge"), Seq("h"), "left_semi")
       .select(col("doc_id")).withColumn("is_exact", lit(1L))
@@ -480,9 +453,7 @@ object SpanDedup {
     * partition subdirs; partition swaps are filesystem moves (the
     * single-JVM stand-in for a table format's replace-partition
     * commit). */
-  private[graft] final case class SignatureStore(root: java.nio.file.Path,
-      compactAppends: Boolean = true,
-      overlapMerge: Boolean = true) {
+  private[graft] final case class SignatureStore(root: java.nio.file.Path) {
     import org.apache.spark.sql.types._
 
     private val hDir = s"$root/h"
@@ -555,23 +526,20 @@ object SpanDedup {
         // the filesystem transaction both sides must reach first.
         var hStage: String = null
         var cStage: String = null
-        inParallel(
+        overlapped(
           { hStage = stageTouched(s, hDir, hSchema, touched,
               bH.filter(col("dp").isin(touched: _*))) },
           { cStage = stageTouched(s, cDir, cSchema, touched,
               bC.filter(col("dp").isin(touched: _*))) })
         swapPartitions(Seq(hStage -> hDir, cStage -> cDir), touched)
-        inParallel(
+        overlapped(
           appendRows(bH.filter(!col("dp").isin(touched: _*)), hDir),
           appendRows(bC.filter(!col("dp").isin(touched: _*)), cDir))
       } else {
-        inParallel(appendRows(bH, hDir), appendRows(bC, cDir))
+        overlapped(appendRows(bH, hDir), appendRows(bC, cDir))
       }
       touched
     }
-
-    private def inParallel(a: => Unit, b: => Unit): Unit =
-      overlapped(overlapMerge)(a, b)
 
     // One file per touched dp partition per append (optimization r18,
     // guide §6 small files): an un-repartitioned partitionBy write fans
@@ -581,11 +549,10 @@ object SpanDedup {
     // per-file open/list overhead back. The dp repartition is a shuffle
     // of batch-sized signature rows (trivial next to the store reads it
     // saves); at cluster scale it is exactly Iceberg's
-    // write.distribution-mode=hash trade. compactAppends = false is the
-    // pre-r18 fanout shape (OptProbe A/B control; store contents
-    // identical either way — only file counts differ).
+    // write.distribution-mode=hash trade (1.64× at the 30× tier, about 7%
+    // dearer at sf0.1: AB_PROBE_r18.jsonl).
     private def appendRows(rows: DataFrame, dir: String): Unit =
-      (if (compactAppends) rows.repartition(col("dp")) else rows)
+      rows.repartition(col("dp"))
         .write.mode("append").partitionBy("dp").parquet(dir)
 
     /** Path of the swap commit marker — ONE file at the store root (not
@@ -694,7 +661,8 @@ object SpanDedup {
 
     /** Fold each partition's accumulated append files into one file —
       * the amortized O(|store|/C) compaction move of the log-structured
-      * trade. Partition-parallel; IngestCurve times it separately. */
+      * trade. Partition-parallel (INGEST_CURVE_r13_30x_compact.json
+      * times it separately). */
     def compact(s: SparkSession): Unit = {
       Seq((hDir, hSchema), (cDir, cSchema)).foreach { case (dir, schema) =>
         val stage = s"$root/compact_${new java.io.File(dir).getName}"
@@ -711,104 +679,64 @@ object SpanDedup {
     def delete(): Unit = rmTree(root)
   }
 
+  /** Run two independent steps concurrently (`a` on the calling thread,
+    * `b` on one spawned thread). Spark's scheduler runs jobs from both
+    * threads at once, so one side's stage tail back-fills the cores the
+    * other leaves idle (1.27× at the 30× tier, AB_PROBE_r19.jsonl). Both
+    * sides complete before return, so callers' ordering invariants
+    * (classify before mutation, stage before swap) hold; the first
+    * failure is rethrown only after BOTH sides have settled (never
+    * mutating the store concurrently with an unwinding exception). */
+  private def overlapped(a: => Unit, b: => Unit): Unit = {
+    @volatile var bErr: Throwable = null
+    val t = new Thread(() => try b catch { case x: Throwable => bErr = x })
+    t.setName("graft-qd18-merge-overlap")
+    t.start()
+    val aErr = try { a; null } catch { case x: Throwable => x }
+    t.join()
+    if (aErr != null) throw aErr
+    if (bErr != null) throw bErr
+  }
+
   /** The qd18 ingest loop over an arbitrary (doc_id, text) frame —
     * package-private so the spec can replay planted corpora and assert
     * the final-batch slice equals [[classifyIncremental]] exactly. The
     * store is LIVE (mutated in place by each merge), so each batch's
     * classification is pinned eagerly before the next merge runs — a
     * bounded |batch| × (doc_id, batch_id, status) frame; the store files
-    * are then deleted eagerly instead of lingering until JVM exit. */
-  /** Run two independent steps concurrently (`a` on the calling thread,
-    * `b` on one spawned thread) — or sequentially when `overlap = false`
-    * (the pre-r19 shape, OptProbe's A/B control). Spark's scheduler runs
-    * jobs from both threads at once, so one side's stage tail back-fills
-    * the cores the other leaves idle (guide §2.6). Both sides complete
-    * before return either way, so callers' ordering invariants (classify
-    * before mutation, stage before swap) hold; the first failure is
-    * rethrown only after BOTH sides have settled (never mutating the
-    * store concurrently with an unwinding exception). */
-  private[graft] def overlapped(overlap: Boolean)(a: => Unit, b: => Unit): Unit =
-    if (!overlap) { a; b }
-    else {
-      @volatile var bErr: Throwable = null
-      val t = new Thread(() => try b catch { case x: Throwable => bErr = x })
-      t.setName("graft-qd18-merge-overlap")
-      t.start()
-      val aErr = try { a; null } catch { case x: Throwable => x }
-      t.join()
-      if (aErr != null) throw aErr
-      if (bErr != null) throw bErr
-    }
-
-  /** Release the storage blocks behind an eagerly localCheckpointed frame
-    * once its last consumer has run. */
-  private def dropLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ => ()
-    }
-
-  private[graft] def ingestSequentially(s: SparkSession, docs: DataFrame,
-      reuseSigs: Boolean = false,
-      compactAppends: Boolean = true,
-      overlapMerge: Boolean = true): DataFrame = {
+    * are then deleted eagerly instead of lingering until JVM exit.
+    *
+    * Pinning each batch's md5 + simhash frames for reuse across
+    * classification and the merge was measured and declined (r18):
+    * 1.12× SLOWER at the 30× tier — the BlockManager round-trip costs
+    * more than the columnar re-scans it saves (AB_PROBE_r18.jsonl). */
+  private[graft] def ingestSequentially(s: SparkSession, docs: DataFrame): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft-qd18-state-")
     registerTempRoot(root)
-    val store = SignatureStore(root, compactAppends, overlapMerge).init()
+    val store = SignatureStore(root).init()
     val outs = (0 to IngestBatches).map { b =>
       val batch = docs.withColumn("bid", batchIdCol)
         .filter(col("bid") === b).drop("bid")
-      // reuseSigs = true pins each batch's md5 + simhash frames eagerly
-      // and reuses them across classification, the merge's existence
-      // probe, and the merge's writes — an r18 MEASURED ATTEMPT, declined
-      // as the default: OptProbe's A/B read ~1.05× faster at sf0.1
-      // (14.4 vs 15.0 s, within noise) but 1.12× SLOWER at the 30× tier
-      // (35.1 vs 31.4 s) — the BlockManager round-trip of the signature
-      // frames costs more than the columnar re-scans it saves (statuses
-      // identical either way, spec-pinned).
-      val classified = (if (reuseSigs) {
-        val bH = batch.select(col("doc_id"), md5(col("text")).as("h"))
-          .localCheckpoint(true)
-        val bC = simhashChunks(batch)
-          .select(col("doc_id"), col("c"), col("chunk"), col("simhash"))
-          .localCheckpoint(true)
-        val cls = classifyAgainstStateSigs(bH, bC,
-            store.readH(s), store.readChunks(s))
-          .withColumn("batch_id", lit(b.toLong))
-          .localCheckpoint(true)
-        if (b < IngestBatches) store.merge(s, bH, bC): Unit
-        // the merge is the last consumer of this batch's signature
-        // blocks — drop them so a full ingest doesn't accumulate one
-        // pinned pair per batch until session end (ADVICE r18). NB
-        // Dataset.unpersist() is a no-op for localCheckpointed frames
-        // (their blocks hang off the RDD, not the CacheManager), so
-        // unpersist the LogicalRDD's RDD directly.
-        dropLocalCheckpoint(bH); dropLocalCheckpoint(bC)
-        cls
-      } else {
-        val clsFrame = classifyAgainstState(batch,
-            store.readH(s), store.readChunks(s))
-          .withColumn("batch_id", lit(b.toLong))
-        val bH = batch.select(col("doc_id"), md5(col("text")).as("h"))
-        var cls: DataFrame = null
-        if (b < IngestBatches) {
-          // classification and the merge's existence probe both read the
-          // SAME pre-merge store state and are independent — overlap them
-          // (guide §2.6; sequential when overlapMerge = false). Only the
-          // mutating half of the merge waits for the classification pin.
-          var touched: Seq[String] = null
-          overlapped(overlapMerge)(
-            { cls = clsFrame.localCheckpoint(true) },
-            { touched = store.probeTouched(s, bH) })
-          store.merge(s, bH,
-            simhashChunks(batch)
-              .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
-            touchedPre = Some(touched)): Unit
-        } else cls = clsFrame.localCheckpoint(true)
-        cls
-      })
-      classified
+      val clsFrame = classifyAgainstState(batch,
+          store.readH(s), store.readChunks(s))
+        .withColumn("batch_id", lit(b.toLong))
+      val bH = batch.select(col("doc_id"), md5(col("text")).as("h"))
+      var cls: DataFrame = null
+      if (b < IngestBatches) {
+        // classification and the merge's existence probe both read the
+        // SAME pre-merge store state and are independent — overlap them.
+        // Only the mutating half of the merge waits for the classification
+        // pin.
+        var touched: Seq[String] = null
+        overlapped(
+          { cls = clsFrame.localCheckpoint(true) },
+          { touched = store.probeTouched(s, bH) })
+        store.merge(s, bH,
+          simhashChunks(batch)
+            .select(col("doc_id"), col("c"), col("chunk"), col("simhash")),
+          touchedPre = Some(touched)): Unit
+      } else cls = clsFrame.localCheckpoint(true)
+      cls
     }
     store.delete()
     outs.reduce(_.union(_))

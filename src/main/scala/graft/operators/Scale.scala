@@ -582,12 +582,13 @@ object Scale {
   // replicates the single matching dim row per split, preserving exact
   // join semantics (which is why the oracle is the plain join). At gate
   // SF the dim broadcasts and there is nothing to split — correct too;
-  // SkewProbe stages the fact-scale version (dim above the broadcast
-  // threshold) and records the skew-split firing + wall time vs both the
-  // unsplit baseline and the targeted-salting rewrite.
+  // the fact-scale version (dim above the broadcast threshold) is
+  // recorded in BASELINE.md's round-8 skewed-JOIN table: the skew-split
+  // firing + wall time vs both the unsplit baseline and the targeted-
+  // salting rewrite.
   // ---------------------------------------------------------------------
-  /** Attach the deterministic Zipf hot key (shared by qx11 and SkewProbe). */
-  private[graft] def zipfKeyed(ev: DataFrame, domain: Int): DataFrame =
+  /** Attach the deterministic Zipf hot key. */
+  private def zipfKeyed(ev: DataFrame, domain: Int): DataFrame =
     ev.withColumn("hot_key",
       expr(s"cast(floor($domain/(1 + (event_id % $domain))) as bigint)"))
 
@@ -611,7 +612,7 @@ object Scale {
 
   // ---------------------------------------------------------------------
   // qx12: AQE-rebalanced output layout — the WRITE-side skew primitive.
-  // qx11/SkewProbe cover the skewed shuffle JOIN; this covers the other
+  // qx11 covers the skewed shuffle JOIN; this covers the other
   // place skew kills a 100 TB run: the final write. Partitioning output
   // by a low-cardinality/skewed column (here event_type — the layout
   // consumers want to prune on) makes one writer task own the hot
@@ -878,7 +879,7 @@ object Scale {
   // CANNOT serve), aggregate — the oracle replays the same predicate over
   // the RAW table. The pruning itself (rows read off the z layout vs a
   // linear layout, both dimensions) is measured in ScaleSpec and
-  // LayoutProbe — layout changes results never, IO always.
+  // LAYOUT_PROBE_r14.json — layout changes results never, IO always.
   // ---------------------------------------------------------------------
   private def zorderDir(d: String): String =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") +
@@ -921,7 +922,7 @@ object Scale {
   // nest rotation when()-trees exponentially in bits). Same gate shape as
   // qx17: write clustered, re-read with the partkey-only range predicate,
   // aggregate; the oracle replays the predicate on the raw table — layout
-  // changes results never, IO always (pruning measured in LayoutProbe).
+  // changes results never, IO always (pruning in LAYOUT_PROBE_r14.json).
   // ---------------------------------------------------------------------
   private def qx19(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

@@ -55,7 +55,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * and amortized; the store itself is only ever read through
   * partition-pruned, page-pruned scans. The qst44 gate proves
   * incremental ≡ one-shot semantics by hashing against qt22's oracle
-  * verbatim after N append batches; ScreenIngestCurve measures the
+  * verbatim after N append batches; SCREEN_INGEST_r18.jsonl records the
   * per-batch cost flat while the store grows.
   */
 private[graft] final class FingerprintStore(s: SparkSession, val dir: String) {
@@ -67,7 +67,7 @@ private[graft] final class FingerprintStore(s: SparkSession, val dir: String) {
   def fanout: Int = meta.fanout
   def rows: Long = meta.rows
 
-  /** The full store as (h, hp) — spec/probe surface, full scan. */
+  /** The full store as (h, hp) — spec surface, full scan. */
   def distinctH: DataFrame = storeScan(s, dir)
 
   /** Append `hRows` (any frame with a long `h` column): dedups the batch,
@@ -102,8 +102,8 @@ private[graft] final class FingerprintStore(s: SparkSession, val dir: String) {
 
   /** Fold append files and re-derive fanout from the live row count; see
     * class doc for the amortization and crash-safety arguments.
-    * `partRows` is a parameter so specs and the ScreenIngestCurve probe
-    * can exercise fanout growth at test scale. */
+    * `partRows` is a parameter so specs can exercise fanout growth at
+    * test scale. */
   def compact(partRows: Long = ScreenPartRows): Unit = {
     val live = storeScan(s, dir)
     val n = live.count() // exact — self-heals any meta undercount
@@ -135,32 +135,26 @@ private[graft] object FingerprintStore {
     * (each probed prefix pays a task and at least one file open). The
     * r17 same-sitting A/B showed exactly that: at a 9.2M-row store,
     * clamped fanout 16 + pushdown beat the 65536-rows/partition scaling
-    * (fanout 256) by ~1.7× (SCREEN_AB_r17). Default raised 65536 →
-    * 1048576 accordingly (VERDICT r17 Next #2; the r18 two-tier A/B is
-    * the measured justification) — env-overridable for A/B probes. */
-  private[graft] val ScreenPartRows: Long =
-    sys.env.get("SPARK_GRAFT_SCREEN_PART_ROWS").map(_.toLong)
-      .getOrElse(1048576L)
+    * (fanout 256) by ~1.7× (SCREEN_AB_r17). Raised 65536 → 1048576
+    * accordingly (VERDICT r17 Next #2; the r18 two-tier A/B in
+    * SCREEN_AB_r18.jsonl is the measured justification). */
+  private val ScreenPartRows: Long = 1048576L
 
-  /** Upper fanout clamp — env-overridable so the ScreenCurve probe can
-    * emulate the beyond-clamp regime (a store that outgrew its fanout)
-    * at test scale and A/B the h-IN page-pruning lever there. */
-  private[graft] val ScreenFanoutMax: Int =
-    sys.env.get("SPARK_GRAFT_SCREEN_FANOUT_MAX").map(_.toInt).getOrElse(4096)
+  /** Upper fanout clamp. The beyond-clamp regime (a store that outgrew
+    * its fanout) and the h-IN page-pruning lever there are recorded in
+    * SCREEN_CURVE_r18.jsonl. */
+  private val ScreenFanoutMax: Int = 4096
 
   /** Probe-size cap for pushing the batch's fingerprint VALUES into the
     * store scan as an `h IN (...)` parquet filter. Above the cap (a
     * catch-up batch) the IN list itself would bloat the plan; partition
-    * pruning alone still applies. Env-overridable so the ScreenCurve
-    * probe can A/B the lever (0 disables). */
-  private[graft] val ScreenProbePushdownCap: Int =
-    sys.env.get("SPARK_GRAFT_SCREEN_PUSHDOWN_CAP").map(_.toInt).getOrElse(32768)
+    * pruning alone still applies. */
+  private[graft] val ScreenProbePushdownCap: Int = 32768
 
   /** Appends between compactions — the amortization constant C of the
     * log-structured trade (qd18's argument): per-partition file count is
     * bounded by C, compaction cost is paid every C batches. */
-  private[graft] val CompactEvery: Int =
-    sys.env.get("SPARK_GRAFT_SCREEN_COMPACT_EVERY").map(_.toInt).getOrElse(8)
+  private val CompactEvery: Int = 8
 
   /** Store fanout for a fingerprint row count: ~partRows rows per
     * partition, clamped to [16, ScreenFanoutMax]. Powers of two so a
@@ -248,8 +242,8 @@ private[graft] object FingerprintStore {
     * left-join rollup requires — is enforced HERE, not assumed of the
     * caller: the `.distinct()` is a no-op exchange for the production
     * path (already distinct; RemoveRedundantAggregates collapses it) and
-    * closes the silent-overcount hazard for probe callers feeding salted
-    * tiers whose cross-copy h values could collide (ADVICE r17). The
+    * closes the silent-overcount hazard for any caller whose h rows are
+    * not already distinct (ADVICE r17). The
     * qst44 spec pins that N appends + compact produce EXACTLY this
     * store's content. */
   private[graft] def write(hRows: DataFrame, dir: String): Unit = {

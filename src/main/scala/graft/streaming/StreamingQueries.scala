@@ -702,7 +702,8 @@ object StreamingQueries {
   // rule — oracle verbatim (exactly how qst18 gates WithinWatermark with
   // a batch-DISTINCT oracle). The expiry/re-keep semantics at the horizon
   // boundary are pinned by a dedicated small-TTL StreamingSpec case, and
-  // the bounded-state claim is a measured StateCurves plateau.
+  // the bounded-state claim is a measured plateau (STATE_CURVES_r08.jsonl,
+  // qst19_blockdedup_ttl).
   // ---------------------------------------------------------------------
   private def qst19(s: SparkSession, d: String): DataFrame =
     blockDedup(s, d,
@@ -1713,38 +1714,28 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   // Store constants, fanout policy, meta IO, and the pruned-scan/append/
   // compact machinery moved to [[FingerprintStore]] (r18 — the store
-  // gained its ingest face, VERDICT r17 Next #1); thin aliases below
-  // keep this file's query code and the probes reading naturally.
-  private[graft] def ScreenProbePushdownCap = FingerprintStore.ScreenProbePushdownCap
+  // gained its ingest face, VERDICT r17 Next #1); a thin alias below
+  // keeps this file's query code reading naturally.
   private def fpPrefix(fanout: Int) = FingerprintStore.fpPrefix(fanout)
 
   /** Build the persisted content-keyed fingerprint index for `seen` at
     * `idxDir` in one shot ([[FingerprintStore.write]]). */
   private[graft] def writeFingerprintIndex(seen: DataFrame, idxDir: String): Unit =
-    writeFingerprintIndexFromH(
+    FingerprintStore.write(
       graft.ext.TextAnalysis.winnowedFingerprints(seen)
         .select(col("h")).distinct(), idxDir)
-
-  /** [[writeFingerprintIndex]] over an already-built h frame (the
-    * ScreenCurve probe feeds salted tiers directly); distinctness is
-    * enforced inside [[FingerprintStore.write]]. */
-  private[graft] def writeFingerprintIndexFromH(hRows: DataFrame, idxDir: String): Unit =
-    FingerprintStore.write(hRows, idxDir)
-
-  /** The recorded fanout of a fingerprint index (from its meta sidecar). */
-  private[graft] def readIndexFanout(s: SparkSession, idxDir: String): Int =
-    FingerprintStore.readMeta(s, idxDir).fanout
 
   /** The qst43 per-batch screen against a persisted index at `idxDir` —
     * package-private so the spec can replay planted corpora and pin the
     * pruned-scan contract on the physical plan. `pushdownCap` is a
-    * parameter (defaulting to the shipping [[ScreenProbePushdownCap]])
+    * parameter (defaulting to the shipping
+    * [[FingerprintStore.ScreenProbePushdownCap]])
     * so the spec can plant an OVER-cap batch and pin the degraded path:
     * partition pruning intact, no h-IN filter, result unchanged. */
   private[graft] def screenAgainstStore(s: SparkSession, idxDir: String,
-      pushdownCap: Int = ScreenProbePushdownCap)(
+      pushdownCap: Int = FingerprintStore.ScreenProbePushdownCap)(
       batch: DataFrame): DataFrame = {
-    val fanout = readIndexFanout(s, idxDir)
+    val fanout = FingerprintStore.readMeta(s, idxDir).fanout
     // trigger-bounded (one ingest batch), read thrice (prefix probe,
     // value probe, join side)
     val fps = graft.ext.TextAnalysis.winnowedFingerprints(batch)
@@ -1825,8 +1816,8 @@ object StreamingQueries {
   // broadcast-served screen, all hash-identical. 100 TB shape: each
   // append touches O(batch) store bytes, compaction is partition-
   // parallel and paid every CompactEvery batches, and fanout re-derives
-  // from live row count as the store grows (ScreenIngestCurve measures
-  // per-batch append+screen cost ~flat across store growth).
+  // from live row count as the store grows (SCREEN_INGEST_r18.jsonl
+  // records per-batch append+screen cost ~flat across store growth).
   // ---------------------------------------------------------------------
   private[graft] val IngestAppendBatches = 6
 

@@ -36,11 +36,9 @@ class BroadcastSiteSpec extends AnyFunSuite {
       (1, "qst11 eval-gram set from a FIXED doc-id range (doc_id < evalN pushed to the scan) - corpus-independent"),
     ("streaming/StreamingQueries.scala", """.join(broadcast(b), Seq("event_type"))""") ->
       (1, "qst27 per-event-type quantile frame: <= |event types| rows (enum-bounded)"),
-    // ----- sinks / measurement mains -----
+    // ----- sinks -----
     ("sinks/Layout.scala", "df.crossJoin(broadcast(stats))") ->
       (1, "1-row global min/max bounds frame for Z-order ranking"),
-    ("AnnProbe.scala", """.crossJoin(broadcast(e.filter(col("vec_id") < 10)""") ->
-      (1, "fixed 10-query probe set (vec_id < 10), corpus-independent"),
     // ----- windows -----
     ("operators/Windows.scala", ".crossJoin(broadcast(bounds))") ->
       (1, "qw13 1-row global [lo,hi] hour-bounds frame"),
@@ -103,7 +101,7 @@ class BroadcastSiteSpec extends AnyFunSuite {
       (2, "fixed-K refined centroid frames (qc02 iterations)"),
     ("ext/Clustering.scala", ".crossJoin(broadcast(tot))") ->
       (1, "1-row n_docs/accuracy frame (qc03)"),
-    ("ext/Clustering.scala", """val err = pin(feats.join(broadcast(wDF), Seq("j"))""") ->
+    ("ext/Clustering.scala", """val err = ckpt(feats.join(broadcast(wDF), Seq("j"))""") ->
       (1, "weight vector: NumFeat rows (model-size constant, qc04)"),
     // ----- text analysis: 1-row stats frames, dictCap-bounded dictionaries,
     // fixed eval ranges and query sets -----

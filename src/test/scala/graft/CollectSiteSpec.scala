@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-memory hazard: a `.collect()` on a corpus-sized frame is a
   * driver OOM at 100 TB exactly like a pinned broadcast of one. Every
   * collect in LIBRARY code (operators/ext/streaming/ysb/sinks/functions/
-  * sources — measurement mains like Bench/Soak/AnnProbe legitimately
-  * collect their own summaries) must be classified here with the
+  * sources — measurement mains like Bench/Soak legitimately collect
+  * their own summaries) must be classified here with the
   * construction that bounds what it pulls to the driver. VERDICT r12
   * audited these sites by hand ("non-findings worth recording"); this
   * lint makes that audit standing — a new unclassified collect fails the
@@ -70,17 +70,22 @@ class CollectSiteSpec extends AnyFunSuite {
       files.filter(_.getName.endsWith(".scala")) ++ dirs.flatMap(scalaFiles)
     }
 
-  private def scan(): Map[(String, String), Int] =
+  /** Non-comment library source lines containing `needle`, as
+    * (file relative to src/main/scala/graft, trimmed line). */
+  private def codeLines(needle: String): Seq[(String, String)] =
     roots.flatMap { root =>
       scalaFiles(root).flatMap { f =>
         val rel = f.getPath.stripPrefix("src/main/scala/graft/")
         val src = scala.io.Source.fromFile(f, "UTF-8")
         try src.getLines().map(_.trim).filter { l =>
-          l.contains(".collect()") && !l.startsWith("*") && !l.startsWith("//")
+          l.contains(needle) && !l.startsWith("*") && !l.startsWith("//")
         }.map(l => (rel, l)).toList
         finally src.close()
       }
-    }.groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+
+  private def scan(): Map[(String, String), Int] =
+    codeLines(".collect()").groupBy(identity).map { case (k, v) => k -> v.size }
 
   test("every collect() in library code is classified bounded-by-construction") {
     val found = scan()
@@ -96,5 +101,16 @@ class CollectSiteSpec extends AnyFunSuite {
       case (k, n) if manifest(k)._1 != n => s"$k: found $n, manifest says ${manifest(k)._1}"
     }
     assert(miscounted.isEmpty, miscounted.mkString("\n"))
+  }
+
+  // Operator shapes and thresholds are constants of the library: a run's
+  // plan must not depend on the environment it happens to inherit. Mains
+  // (Bench, Verify, Soak, ...) own their configuration; library code takes
+  // parameters, never env reads.
+  test("library code reads no environment variables") {
+    val reads = Seq("sys.env", "System.getenv").flatMap(codeLines)
+    assert(reads.isEmpty,
+      "env reads in library code (make it a constant or a parameter set " +
+        "by the calling main):\n  " + reads.sorted.mkString("\n  "))
   }
 }

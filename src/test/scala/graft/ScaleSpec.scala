@@ -65,7 +65,7 @@ class ScaleSpec extends SparkSpec {
   test("AQE splits a skewed TERMINAL join without forcing (qx11's scale face)") {
     // The test above needs forceOptimizeSkewedJoin because its aggregate
     // reuses the join key's partitioning. The TERMINAL enrich join — the
-    // qx11/SkewProbe scale shape, join → write with nothing above it keyed
+    // qx11 scale shape, join → write with nothing above it keyed
     // on the join key — must split WITHOUT the force knob: that's the
     // default-config behavior a 100 TB run relies on.
     val overrides = Map(
